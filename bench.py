@@ -347,11 +347,13 @@ def main() -> None:
 
     import __spark_entry__ as entry_mod
     from tg_reporting_etl_spark.functions.persist import release_persists
+    from tg_reporting_etl_spark.plans.catalog import query_kinds
     from tg_reporting_etl_spark.session import get_spark
 
     repeats = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPEATS", "3")))
     spark = get_spark("bench")
     qs = entry_mod.queries()
+    kinds = query_kinds()
 
     # r19 (verdict task 2): PERF_r18 fired ``suspect_cpus_ignored``
     # because nothing in the bench output PROVES the session width the
@@ -379,8 +381,9 @@ def main() -> None:
     # price of scale-independent exactness).  They run ONCE: at tens of
     # seconds the scheduler-noise floor min-of-N exists to defeat is a
     # small relative error, and repeating the worst case would dominate
-    # total bench wall-clock without adding signal.
-    adversarial = {"doc_ngram_jaccard_exact"}
+    # total bench wall-clock without adding signal.  The bucket is
+    # declared on each query's @register (``kind=``).
+    adversarial = {n for n in qs if kinds[n] == "adversarial"}
 
     # Run adversarial queries LAST: round 8 showed the four queries
     # registered immediately after the 31 s worst-case prefix join
@@ -450,39 +453,12 @@ def main() -> None:
         "workload_io": "parquet overwrite 2M rows x 3 cols (8 files) + 2-col re-read agg, min-of-3",
     }
     total = round(sum(timings.values()), 3)
-    # Orchestration-lifecycle queries measure fixed per-job scheduling +
-    # sink overhead on constant-size board metadata, not operator
-    # throughput — report them separately so round-over-round data-path
-    # totals stay comparable as lifecycle coverage grows.
-    orch = {
-        "rerun_journal_lifecycle",
-        "window_sink_roundtrip",
-        "init_board_seed",
-        "board_scan_priority",
-        "corpus_ingest_dedup_lifecycle",
-        "corpus_index_compaction_lifecycle",
-        # streaming lifecycle sims: cost is micro-batch scheduling +
-        # state store churn on a fixed batch count, not operator
-        # throughput — same bucket as the other lifecycle queries
-        "streaming_exact_dedup_index",
-        "streaming_trans_summary_5min",
-        "streaming_minhash_lsh_index",
-        "streaming_continuous_topk",
-        "streaming_asof_enrich",
-        "streaming_wau",
-        "streaming_session_window",
-        # r15 bucket fix: the r14 streaming rows and the update-mode
-        # spine row are the same micro-batch-sim class as the rows
-        # above and were inflating data_path_total (~18 s of stream
-        # startup + processAllAvailable floor booked as data path).
-        # Cross-round per-query comparisons are unaffected (the
-        # queries map is bucket-independent).
-        "streaming_player_summary_5min",
-        "streaming_embedding_dup_index",
-        "streaming_cms_counters",
-        "streaming_quality_audit",
-        "streaming_trans_summary_update",
-    }
+    # Orchestration-lifecycle queries (``kind="orch"``: board, sink and
+    # streaming micro-batch lifecycles) measure fixed per-job scheduling +
+    # sink overhead on constant-size work, not operator throughput —
+    # report them separately so round-over-round data-path totals stay
+    # comparable as lifecycle coverage grows.
+    orch = {n for n in qs if kinds[n] == "orch"}
     orch_total = round(sum(t for n, t in timings.items() if n in orch), 3)
     # (adversarial set defined above the timing loop) — bucketed apart so
     # data_path_total stays comparable across rounds.

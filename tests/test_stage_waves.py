@@ -1,18 +1,15 @@
-"""Focused contracts for plans.streaming_plans._stage_waves (r18).
+"""Focused contracts for plans.streaming_plans._stage_waves.
 
-The wave sims' one-pass staging replaced N filtered source scans with
-one partitionBy write plus hard-link releases.  Pinned here:
+The wave sims stage their input with one partitionBy write and release
+each wave with hard links.  Pinned here:
 
-- a release delivers exactly its groups' rows, and a TUPLE release
-  delivers the union (the overlapping-wave form);
-- a group released twice is re-delivered under DISTINCT paths (the
-  file source identifies files by path, so this is the replay the old
-  second filtered write produced);
+- a release delivers exactly its wave's rows, under new paths;
 - release order == file mtime order (the file source batches by
-  timestamp; the old sequential writes guaranteed this implicitly);
+  timestamp);
 - rows whose wave expression is NULL are staged to the default
-  partition and can never be released (the old ``filter(pred)`` form
-  dropped them from every wave).
+  partition and can never be released;
+- the overlapping-wave expression stages each wave as its own file
+  group and keeps negative keys deliverable.
 """
 
 from __future__ import annotations
@@ -39,8 +36,8 @@ def _read_ids(spark, src):
     return sorted(r.doc_id for r in spark.read.parquet(src).collect())
 
 
-def test_stage_waves_overlap_release_and_order(spark, tmp_path):
-    # doc_id % 3 groups; doc_id 9 has a NULL group -> never releasable
+def test_stage_waves_release_order_and_null_wave(spark, tmp_path):
+    # doc_id % 3 waves; the NULL doc_id has a NULL wave -> never releasable
     df = spark.createDataFrame(
         [(i,) for i in range(9)], "doc_id long"
     ).unionByName(spark.createDataFrame([(None,)], "doc_id long")).withColumn(
@@ -49,45 +46,30 @@ def test_stage_waves_overlap_release_and_order(spark, tmp_path):
     staging, src = str(tmp_path / "staging"), str(tmp_path / "src")
     release = _stage_waves(df, F.col("doc_id") % 3, staging, src)
 
-    release((0, 1))  # wave A: groups {0,1} = old filter(% 3 != 2)
-    wave_a = _read_ids(spark, src)
-    assert wave_a == [0, 1, 3, 4, 6, 7]
-    a_files = set(glob.glob(f"{src}/*.parquet"))
-    # group-0 files exist only in release 1: their mtime must predate release 2
-    g0_mtime = max(os.path.getmtime(f) for f in a_files if _group_of(f) == "0")
-
-    release((1, 2))  # wave B: groups {1,2} = old filter(% 3 != 0)
-    all_ids = _read_ids(spark, src)
-    # group 1 re-delivered (duplicated), group 2 new, NULL row absent
-    assert all_ids == sorted([0, 1, 3, 4, 6, 7] + [1, 2, 4, 5, 7, 8])
-    b_files = set(glob.glob(f"{src}/*.parquet")) - a_files
-    assert b_files, "second release must land NEW paths"
-    assert all(os.path.getmtime(f) > g0_mtime for f in b_files), (
-        "release order must equal mtime order for the file source"
-    )
+    released = set()
+    last_mtime = 0.0
+    for k, want in ((0, [0, 3, 6]), (1, [0, 1, 3, 4, 6, 7]), (2, list(range(9)))):
+        release(k)
+        assert _read_ids(spark, src) == want  # the NULL row is never delivered
+        files = set(glob.glob(f"{src}/*.parquet"))
+        new = files - released
+        assert new and {_group_of(f) for f in new} == {str(k)}, "one release lands one wave"
+        assert all(os.path.getmtime(f) > last_mtime for f in new), (
+            "release order must equal mtime order for the file source"
+        )
+        last_mtime = max(os.path.getmtime(f) for f in new)
+        released = files
     # hard links, not copies: staged bytes are shared, not rewritten
     staged = glob.glob(f"{staging}/_wave=1/*.parquet")
-    assert staged and all(os.stat(f).st_nlink >= 3 for f in staged)
-    # r18 ADVICE: os.utime on a hard link mutates the SHARED inode, so
-    # re-releasing group 1 retroactively re-stamps release 1's already-
-    # delivered group-1 links to release 2's stamp — "mtime order ==
-    # release order" holds only for first-time links.  Benign for the
-    # file source (tracks seen files by path, consulted between
-    # processAllAvailable calls); pinned so a reader of the docstring
-    # caveat can see the actual behavior.
-    g1_a = sorted(f for f in a_files if _group_of(f) == "1")
-    g1_b = sorted(f for f in b_files if _group_of(f) == "1")
-    assert g1_a and g1_b
-    assert {os.path.getmtime(f) for f in g1_a} == {os.path.getmtime(f) for f in g1_b}
+    assert staged and all(os.stat(f).st_nlink >= 2 for f in staged)
+    assert glob.glob(f"{staging}/_wave=__HIVE_DEFAULT_PARTITION__/*.parquet")
 
 
 def test_overlap_waves_explode_staging(spark, tmp_path):
-    """r19 (verdict task 1): the overlap rows stage by WAVE via explode —
-    each wave is its own file group with the old filtered writes' byte
-    layout (the r18 tuple-release layout was ~25% slower at the 10x
-    probe), every group is released exactly once, and pmod keeps
-    negative ids deliverable (Spark's % would stage them to _wave=-1
-    and silently drop them)."""
+    """The overlap rows stage by WAVE via explode: each wave is its own
+    file group, released exactly once, and pmod keeps negative ids
+    deliverable (Spark's % would stage them to _wave=-1 and silently
+    drop them)."""
     df = (
         spark.createDataFrame([(i,) for i in range(9)] + [(-1,)], "doc_id long")
         .unionByName(spark.createDataFrame([(None,)], "doc_id long"))
@@ -95,20 +77,18 @@ def test_overlap_waves_explode_staging(spark, tmp_path):
         .coalesce(1)
     )
     staging, src = str(tmp_path / "staging"), str(tmp_path / "src")
-    wave_expr, w1, w2 = _overlap_waves(F.col("doc_id"))
-    release = _stage_waves(df, wave_expr, staging, src)
+    release = _stage_waves(df, _overlap_waves(F.col("doc_id")), staging, src)
 
-    release(w1)  # wave A: groups {0,1} = old filter(% 3 != 2)
+    release(0)  # wave A: groups {0,1} = old filter(% 3 != 2)
     wave_a = _read_ids(spark, src)
     # pmod(-1,3)=2 -> wave B only; NULL key -> NULL array -> no row staged
     assert wave_a == [0, 1, 3, 4, 6, 7]
     a_files = set(glob.glob(f"{src}/*.parquet"))
-    # ONE file group per wave (1-partition source -> 1 file), exactly the
-    # old filtered write's layout — not the tuple release's 2 path groups
+    # ONE file group per wave (1-partition source -> 1 file)
     assert len(a_files) == 1
     mtime_a = max(os.path.getmtime(f) for f in a_files)
 
-    release(w2)  # wave B: groups {1,2} = old filter(% 3 != 0)
+    release(1)  # wave B: groups {1,2} = old filter(% 3 != 0)
     all_ids = _read_ids(spark, src)
     # the shared group {1,4,7} is re-delivered; -1 arrives once, in wave B
     assert all_ids == sorted([0, 1, 3, 4, 6, 7] + [-1, 1, 2, 4, 5, 7, 8])

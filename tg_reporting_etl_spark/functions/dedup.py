@@ -340,11 +340,6 @@ def _verify_dense(sets: DataFrame, ex: DataFrame, pairs: DataFrame, tau: float, 
     )
 
 
-def jaccard_for_pairs(shingles: DataFrame, pairs: DataFrame, tau: float) -> DataFrame:
-    """String-shingle convenience wrapper over :func:`_jaccard_on_hashed`."""
-    return _jaccard_on_hashed(hash_shingles(shingles), pairs, tau)
-
-
 def _tau_fraction(tau: float) -> tuple[int, int]:
     """``tau`` as a SMALL-denominator rational (p, q), rounded DOWN.
 

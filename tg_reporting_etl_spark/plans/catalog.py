@@ -28,14 +28,23 @@ class QuerySpec:
     spark_fn: Callable[[SparkSession, str], DataFrame]
     oracle: str | None
     survey_ids: str  # SURVEY.md §2 operator ids exercised
+    # bench bucket: "data" (operator throughput), "orch" (scheduling,
+    # sink and micro-batch lifecycle on fixed-size work) or
+    # "adversarial" (an operator driven into its documented worst case)
+    kind: str = "data"
 
+
+KINDS = ("data", "orch", "adversarial")
 
 _REGISTRY: dict[str, QuerySpec] = {}
 
 
-def register(name: str, oracle: str | None, survey_ids: str):
+def register(name: str, oracle: str | None, survey_ids: str, kind: str = "data"):
+    if kind not in KINDS:
+        raise ValueError(f"{name}: kind must be one of {KINDS}, got {kind!r}")
+
     def deco(fn: Callable[[SparkSession, str], DataFrame]):
-        _REGISTRY[name] = QuerySpec(name, fn, oracle, survey_ids)
+        _REGISTRY[name] = QuerySpec(name, fn, oracle, survey_ids, kind)
         return fn
 
     return deco
@@ -49,6 +58,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 def oracle_sql() -> dict[str, str]:
     _load_all()
     return {name: spec.oracle for name, spec in _REGISTRY.items() if spec.oracle is not None}
+
+
+def query_kinds() -> dict[str, str]:
+    """Each query's bench bucket (see ``QuerySpec.kind``)."""
+    _load_all()
+    return {name: spec.kind for name, spec in _REGISTRY.items()}
 
 
 _LOADED = False
@@ -88,6 +103,7 @@ __all__ = [
     "register",
     "queries",
     "oracle_sql",
+    "query_kinds",
     "round_doubles",
     "orc",
     "td",

@@ -59,6 +59,7 @@ WHERE b1.digest IS NULL"""
     "corpus_index_compaction_lifecycle",
     _COMPACT_ORACLE,
     survey_ids="maintenance: small-file compaction of the ingest index is content-invariant (sources/writers.py compact_table)",
+    kind="orch",
 )
 def q_corpus_index_compaction_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lifecycle: two ingest batches append one file per shard each,
@@ -121,6 +122,7 @@ def q_corpus_index_compaction_lifecycle(spark: SparkSession, sf_dir: str) -> Dat
     "corpus_ingest_dedup_lifecycle",
     _INGEST_ORACLE,
     survey_ids="LLM: incremental ingest dedup vs persistent digest index (batch twin of streaming exact dedup); T1 S2",
+    kind="orch",
 )
 def q_corpus_ingest_dedup_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lifecycle: ingest batch 1 (doc_id % 3 != 2), then batch 2 (the

@@ -242,6 +242,7 @@ SELECT doc_a, doc_b, jaccard FROM jacc"""
     "doc_ngram_jaccard_exact",
     _NGRAM_EXACT_ORACLE,
     survey_ids="LLM: n-gram Jaccard near-dup (gated exact scale path)",
+    kind="adversarial",
 )
 def q_doc_ngram_jaccard_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACT near-dup pairs at ANY scale factor — the scale-independent

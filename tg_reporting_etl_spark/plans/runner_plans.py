@@ -289,7 +289,7 @@ UNION ALL
 SELECT * FROM backfill"""
 
 
-@register("init_board_seed", _init_oracle(), survey_ids="G4 J6 J8 F11 U1")
+@register("init_board_seed", _init_oracle(), survey_ids="G4 J6 J8 F11 U1", kind="orch")
 def q_init_board_seed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """G4 init seeding + J8 config enrichment + J6 monthly backfill
     (initialize/init_main.py:8-95) as one deterministic board snapshot."""
@@ -353,7 +353,7 @@ SELECT *,
 FROM pending"""
 
 
-@register("board_scan_priority", _board_scan_oracle(), survey_ids="T2 O1 O2 U1 P7")
+@register("board_scan_priority", _board_scan_oracle(), survey_ids="T2 O1 O2 U1 P7", kind="orch")
 def q_board_scan_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T2 two-board scan with O1 priority order captured as a value and
     the O2 existence probe as a literal column (ExecUtils.py:11-31)."""
@@ -441,7 +441,7 @@ SELECT platform, site_code, game_code, report_class, gte_time, lt_time,
 FROM applied_by"""
 
 
-@register("rerun_journal_lifecycle", _rerun_journal_oracle(), survey_ids="ST3 T1 U2 P9")
+@register("rerun_journal_lifecycle", _rerun_journal_oracle(), survey_ids="ST3 T1 U2 P9", kind="orch")
 def q_rerun_journal_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ST3 journal lifecycle against the real parquet journal: pending
     rows consumed exactly once, applied rows re-activated by resubmit,
@@ -534,7 +534,7 @@ SELECT platform, player_name, CAST(summary_date AS INT), CAST(hours AS INT),
 FROM over"""
 
 
-@register("window_sink_roundtrip", _sink_oracle(), survey_ids="S2 S3 ST6 P5")
+@register("window_sink_roundtrip", _sink_oracle(), survey_ids="S2 S3 ST6 P5", kind="orch")
 def q_window_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S3/ST6 delete-before-insert round-trip on a real partitioned
     parquet table: only the overwritten window's partition is replaced,

@@ -1,30 +1,51 @@
-"""Driver-visible Structured Streaming parity (SURVEY §2.10 + LLM
-streaming layer): run a REAL streaming query — file-source micro-
-batches, cross-batch dedup state, memory sink — and oracle-check its
-materialized output as a batch table.
+"""Structured Streaming twins of batch catalog rows (SURVEY §2.10 and
+the LLM streaming layer).
 
-The streaming components were previously pytest-pinned only (the
-driver's harness compares batch DataFrames); this catalog row closes
-that gap with a deterministic fixture: the stream's OUTPUT is order-
-insensitive by construction (one row per distinct content digest), so
-whatever order the file source assigns to micro-batches, the final
-index matches the closed-form batch answer.
+Each row feeds a fixture table through a REAL streaming query (file
+source, micro-batches, cross-batch state, a sink) and returns the
+sink's final contents as a batch frame, so the DuckDB oracle checks the
+streaming answer against the batch closed form.  Every row's output is
+order-insensitive by construction, so whatever batches the file source
+forms, the final table matches the oracle.
+
+All rows run on one harness, ``run_wave_sim``.  It stages the input in
+one scan, split into numbered waves by the row's wave expression
+(``_stage_waves``), then releases waves into the file source's
+directory between triggers.  A wave plan is a sequence of steps; a step
+releases one wave (an int) or several at once (a tuple), then waits
+until the query has processed everything released.  The rows use four
+plans:
+
+- ``(0, 1)``, the default: one wave per step;
+- ``((0, 1, 2),)``: every wave lands before the first trigger and
+  ``maxFilesPerTrigger`` splits the backlog into several micro-batches;
+- ``(0, 1, 2, 3)``: the update-mode rows, whose third wave is LATE data
+  the watermark must still accept;
+- any plan plus ``restart_before=i``: when
+  ``SPARK_GRAFT_STREAM_RESTART=1``, the query is stopped after step
+  ``i - 1`` and a new query resumes from the same checkpoint.
+
+A row supplies only what differs: its input frame, its wave
+expression, ``start(stream, tmp)`` to start the sink, ``collect(tmp)``
+to read the result, and the output schema.
 """
 
 from __future__ import annotations
 
 import os
+import shutil
+import tempfile
+from contextlib import contextmanager
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import DataType, IntegralType
 
 from tg_reporting_etl_spark.adapters import oracle as orc
 from tg_reporting_etl_spark.adapters import testdata as td
 from tg_reporting_etl_spark.plans.catalog import EVENTS_GTE, EVENTS_LT, register
 from tg_reporting_etl_spark.plans.util import round_doubles
 from tg_reporting_etl_spark.sources.readers import load_table
-
-from contextlib import contextmanager
 
 
 @contextmanager
@@ -35,12 +56,11 @@ def _stream_state_scope(spark, parts: int = 4):
     ``spark.sql.shuffle.partitions`` at query start; at the fixture's
     micro-batch sizes the per-batch cost is state-store file commits x
     partitions x stateful operators, not data — 32 partitions spend
-    ~4x the wall-clock of 4 on identical output (profiled r13:
-    streaming_wau 13.1 s -> 3.4 s).  On a real cluster this knob is
-    sized to executor count x state volume, exactly as here: partitions
-    should match the state's scale, not default to the batch-join
-    width.  Session-scoped, restored in ``finally``; batch-side wave
-    writes inside the scope are metadata-sized.
+    ~4x the wall-clock of 4 on identical output (streaming_wau
+    13.1 s -> 3.4 s).  On a real cluster this knob is sized to executor
+    count x state volume, exactly as here: partitions should match the
+    state's scale, not default to the batch-join width.  Session-scoped,
+    restored in ``finally``.
     """
     old = spark.conf.get("spark.sql.shuffle.partitions", "32")
     spark.conf.set("spark.sql.shuffle.partitions", str(parts))
@@ -50,98 +70,167 @@ def _stream_state_scope(spark, parts: int = 4):
         spark.conf.set("spark.sql.shuffle.partitions", old)
 
 
-def _stage_waves(df, wave_col, staging: str, src: str, drop=()):
+def _stage_waves(df, wave_col, staging: str, src: str):
     """One-pass wave staging for a micro-batch arrival simulation.
 
-    The wave sims fed their file source with one ``df.filter(wave_k)
-    .write`` per wave — N full scans of the source for N waves (the
-    trans update row: 6.7 s of a ~20 s cold run in wave writes alone).
     Arrival order is about WHEN files land in the source dir, not when
-    their bytes were computed, so stage every wave in ONE scan
-    (``partitionBy`` on the wave id — no shuffle, same bytes, one job)
-    and release wave k between triggers with O(files) same-filesystem
-    hard links (~1 ms).  Returns ``release(k)``; a wave with no rows
-    stages no dir and releases as a no-op, exactly like the empty
-    filtered write it replaces.
-
-    ``release`` also accepts a TUPLE of staged group ids (r18), which
-    hard-links the shared group's files TWICE under distinct names.
-    r19: the four overlapping-wave rows no longer use this — their
-    tuple release landed 2 path groups per wave where the old filtered
-    writes landed 1, and the probe measured the embedding index ~25 %
-    slower at 10x under that layout; they now stage via
-    ``_overlap_waves`` (explode), so every production release names a
-    single group exactly once.  The tuple form remains for generality
-    and is pinned by tests/test_stage_waves.py.  Caveat (r18 ADVICE):
-    ``os.utime`` on a hard link mutates the SHARED inode, so
-    re-releasing a group retroactively re-stamps the earlier release's
-    already-delivered links (and the staged copies) — "strictly
-    increasing mtime == release order" holds per release call only for
-    first-time links.  Benign for Spark's file source, which tracks
-    seen files by path and is only consulted between
-    ``processAllAvailable`` calls, but do not rely on the mtimes of a
-    re-released group.
+    their bytes were computed, so every wave is staged in ONE scan
+    (``partitionBy`` on the wave id — no shuffle, one job) instead of
+    one filtered write per wave.  Returns ``release(k)``, which hard-links
+    wave k's staged files into ``src`` (O(files), ~1 ms) under fresh
+    names stamped with strictly increasing mtimes, so release order is
+    the file source's timestamp order.  A wave with no rows stages no
+    dir and releases as a no-op; rows whose wave id is NULL are never
+    released.  ``os.utime`` on a hard link stamps the shared inode, so a
+    wave released twice re-stamps its earlier links too.
     """
     import glob
-    import os
     import time
 
-    staged = df.withColumn("_wave", wave_col)
-    if drop:
-        staged = staged.drop(*drop)  # wave-prep-only columns (after wave_col is bound)
-    staged.write.partitionBy("_wave").parquet(staging)
+    df.withColumn("_wave", wave_col).write.partitionBy("_wave").parquet(staging)
     os.makedirs(src, exist_ok=True)
     t0 = time.time()
     seq = [0]
 
-    def release(k) -> None:
+    def release(k: int) -> None:
         seq[0] += 1
         stamp = t0 + seq[0]  # strictly increasing, 1 s apart: release order == mtime order
-        groups = k if isinstance(k, (tuple, list)) else (k,)
-        for g in groups:
-            for i, f in enumerate(sorted(glob.glob(f"{staging}/_wave={int(g)}/*.parquet"))):
-                dst = f"{src}/w{seq[0]}_{int(g)}_{i}_{os.path.basename(f)}"
-                os.link(f, dst)
-                os.utime(dst, (stamp, stamp))
+        for i, f in enumerate(sorted(glob.glob(f"{staging}/_wave={int(k)}/*.parquet"))):
+            dst = f"{src}/w{seq[0]}_{int(k)}_{i}_{os.path.basename(f)}"
+            os.link(f, dst)
+            os.utime(dst, (stamp, stamp))
 
     return release
 
 
 def _overlap_waves(key):
-    """Staging plan for the two OVERLAPPING micro-batch waves
-    ``key%3 in {0,1}`` then ``{1,2}``: returns ``(wave_expr, w1, w2)``
-    for ``_stage_waves(df, wave_expr, ...)`` + ``release(w1)`` /
-    ``release(w2)``.
+    """Wave expression for the two OVERLAPPING waves ``key%3 in {0,1}``
+    then ``{1,2}``, staged as waves 0 and 1.
 
-    r19 (verdict task 1): the r18 tuple-release form staged the corpus
-    by GROUP (``key % 3``) and delivered each wave as 2 hard-linked
-    path groups; the 10x probe measured the embedding index ~25 %
-    slower under that layout than the old per-wave filtered writes
-    (interleaved A/B: 87-89 s staged vs 67-70 s filtered).  This form
-    stages by WAVE instead: ``explode`` duplicates the shared group's
-    rows at staging time (group 0 -> wave [0], group 1 -> [0, 1],
-    group 2 -> [1]), so ``partitionBy("_wave")`` writes each wave as
-    its own file(s) with the old filtered writes' byte layout — same
-    file count, same intra-wave row order, one file group per release —
-    while still scanning the source exactly once (guide §6).  Staged
-    bytes are 4/3 of the corpus, identical to what the two filtered
-    writes used to write across their 2 full scans.
-
-    ``pmod`` rather than ``%`` (r18 ADVICE): Spark's ``%`` keeps the
-    dividend's sign, so a negative id would stage to ``_wave=-1`` and
-    never be released — a silent row drop the old filters did not
-    have.  ``pmod`` lands every non-NULL id in {0,1,2}; fixture ids
-    are non-negative, so results are bit-identical.  A NULL key yields
-    a NULL array and ``explode`` emits no row — matching the old
-    NULL-wave exclusion.
+    ``explode`` duplicates the shared group's rows at staging time
+    (group 0 -> wave [0], group 1 -> [0, 1], group 2 -> [1]), so each
+    wave is its own file group, released once, while the source is
+    still scanned once.  Staged bytes are 4/3 of the input.  ``pmod``
+    rather than ``%``: Spark's ``%`` keeps the dividend's sign, so a
+    negative id would stage to group -1 and never be released.  A NULL
+    key yields a NULL array and ``explode`` emits no row.
     """
     g = F.pmod(key, F.lit(3))
-    expr = F.explode(
+    return F.explode(
         F.when(g == 0, F.array(F.lit(0)))
         .when(g == 1, F.array(F.lit(0), F.lit(1)))
         .when(g == 2, F.array(F.lit(1)))
     )
-    return expr, 0, 1
+
+
+def run_wave_sim(
+    spark: SparkSession,
+    df: DataFrame,
+    wave_col,
+    start,
+    collect,
+    schema: str,
+    *,
+    waves=(0, 1),
+    parts: int = 4,
+    max_files: int | None = None,
+    restart_before: int | None = None,
+) -> DataFrame:
+    """Run ``df`` through a streaming query in waves; return the result.
+
+    ``df`` is staged by ``wave_col`` (see ``_stage_waves``) and read back
+    as a parquet file stream with ``df``'s own schema.  The first step
+    of ``waves`` is released before ``start(stream, tmp)`` starts the
+    query; every later step is released into the running query.  Each
+    step is followed by ``processAllAvailable``.  With
+    ``SPARK_GRAFT_STREAM_RESTART=1`` and ``restart_before=i``, the query
+    is stopped before step i and ``start`` is called again on the same
+    ``tmp`` (so the same checkpoint).  ``collect(tmp)`` is read after
+    the last step; its columns are selected by name and cast to
+    ``schema`` before the pandas hand-off.  ``tmp`` is a scratch
+    directory removed on exit, and a memory sink's view is dropped.
+    Staging runs at the session's width; the query and ``collect`` run
+    inside the ``parts``-wide state scope.
+    """
+    import pandas as pd
+
+    restart = restart_before is not None and os.environ.get("SPARK_GRAFT_STREAM_RESTART") == "1"
+    out = DataType.fromDDL(schema)
+    tmp = tempfile.mkdtemp(prefix="wave_sim_")
+    src = f"{tmp}/src"
+    try:
+        release = _stage_waves(df, wave_col, f"{tmp}/staging", src)
+        reader = spark.readStream.schema(df.drop("_wave").schema)
+        if max_files:
+            reader = reader.option("maxFilesPerTrigger", str(max_files))
+
+        def step(i):
+            for k in waves[i] if isinstance(waves[i], tuple) else (waves[i],):
+                release(k)
+
+        with _stream_state_scope(spark, parts):
+            step(0)
+            q = start(reader.parquet(src), tmp)
+            try:
+                q.processAllAvailable()
+                for i in range(1, len(waves)):
+                    if restart and i == restart_before:
+                        q.stop()  # kill; its state now lives only in the checkpoint
+                        q = start(reader.parquet(src), tmp)
+                    step(i)
+                    q.processAllAvailable()
+                # by name: createDataFrame(pdf, schema) below maps positionally
+                pdf = collect(tmp).select(*[F.col(f.name).cast(f.dataType) for f in out.fields]).toPandas()
+            finally:
+                q.stop()
+                if q.name:  # only memory sinks are named: the name is their view
+                    spark.catalog.dropTempView(q.name)
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+    # A nullable integer column with NULLs comes back from toPandas as
+    # float64/NaN, which the non-Arrow createDataFrame verifier rejects
+    # for an integer type (a vanilla session runs without Arrow).
+    for f in out.fields:
+        if isinstance(f.dataType, IntegralType) and pdf[f.name].dtype.kind == "f":
+            pdf[f.name] = pd.Series(
+                [None if pd.isna(v) else int(v) for v in pdf[f.name]], index=pdf.index, dtype=object
+            )
+    # pandas -> Arrow LocalRelation (a row list would parallelize to 32 tasks)
+    return spark.createDataFrame(pdf, out)
+
+
+def _ts(s: str):
+    return F.lit(s).cast("timestamp")
+
+
+def _month_halves():
+    """Two time-split waves (first half of the month, then the rest).
+    Two whens and no otherwise: a NULL ts lands in neither wave."""
+    split = _ts("2024-01-16 00:00:00")
+    return F.when(F.col("ts") < split, 0).when(F.col("ts") >= split, 1)
+
+
+# The partitioned merge sink's derived date-key columns (update-mode rows).
+_DATE_KEYS_SQL = """,
+       CAST(year(start_time) * 10000 + month(start_time) * 100 + day(start_time) AS INT) AS summary_date,
+       CAST(hour(start_time) AS INT) AS hours,
+       CAST(minute(start_time) AS INT) AS mins"""
+_DATE_KEYS_SCHEMA = ", summary_date int, hours int, mins int"
+
+_T5_SCHEMA = (
+    "platform string, site_code string, player_name string, country string, "
+    "trans_in_amount double, trans_out_amount double, trans_in_count long, "
+    "trans_out_count long, trans_out_lost_amount double, start_time timestamp"
+)
+_P5_SCHEMA = (
+    "platform string, site_code string, game_code string, player_name string,"
+    " country string, b_count long, b_amount double, w_amount double,"
+    " fee_amount double, profit_amount double, refund_amount double,"
+    " normal_amount double, bonus_amount double, free_amount double,"
+    " jp_amount double, valid_amount double, cancel_amount double,"
+    " p_before_amount double, p_after_amount double, tg_after_amount double,"
+    " ratio double, rtp double, is_risky int, start_time timestamp"
+)
 
 
 # The stream's emitted rows are exactly one per distinct digest seen
@@ -158,6 +247,7 @@ WHERE text IS NOT NULL
     "streaming_exact_dedup_index",
     _STREAM_DEDUP_ORACLE,
     survey_ids="ST1 ST6 + LLM streaming exact dedup (streaming/pipeline.py streaming_exact_dedup)",
+    kind="orch",
 )
 def q_streaming_exact_dedup_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Feed the documents corpus through ``streaming_exact_dedup`` as
@@ -170,73 +260,46 @@ def q_streaming_exact_dedup_index(spark: SparkSession, sf_dir: str) -> DataFrame
     batches, and an append-mode sink — then proves the streaming
     answer equals the batch closed form via the DuckDB oracle.
     """
-    import shutil
-    import tempfile
-
     from tg_reporting_etl_spark.streaming.pipeline import (
         start_memory_sink,
         streaming_exact_dedup,
     )
 
-    docs = load_table(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
-    base = docs.select(
+    base = load_table(spark, sf_dir, "documents").filter(F.col("text").isNotNull()).select(
         "doc_id",
         "text",
         # constant event time: the 1h watermark never expires state
         # within the run, so dedup is corpus-wide like the batch twin
-        F.lit("2024-01-05 10:00:00").cast("timestamp").alias("ingest_time"),
+        _ts("2024-01-05 10:00:00").alias("ingest_time"),
     )
-    tmp = tempfile.mkdtemp(prefix="stream_dedup_")
-    src = f"{tmp}/src"
     sink = "streaming_exact_dedup_index_sink"
-    try:
-        # r18: state scope (4 partitions) — dropDuplicatesWithinWatermark
-        # keys per-partition state stores; at the fixture's batch sizes
-        # the per-trigger cost is state commits x partitions, not data
-        # (same rationale/measurement as the r13 rows already scoped)
-        with _stream_state_scope(spark):
-            # r19: one scan stages the corpus by WAVE (explode: the shared
-            # doc_id%3==1 third is written into both waves — the re-delivery
-            # the old second filtered write produced, with its byte layout)
-            wave_expr, w1, w2 = _overlap_waves(F.col("doc_id"))
-            release = _stage_waves(base, wave_expr, f"{tmp}/staging", src)
-            release(w1)
-            stream = spark.readStream.schema(
-                "doc_id long, text string, ingest_time timestamp"
-            ).parquet(src)
-            q = start_memory_sink(streaming_exact_dedup(stream), sink, mode="append")
-            try:
-                q.processAllAvailable()
-                # second wave lands while the query runs: %3==1 docs replay
-                # (cross-batch duplicates -> dropped by state), %3==2 are new
-                release(w2)
-                q.processAllAvailable()
-                pdf = spark.sql(f"SELECT digest FROM {sink}").toPandas()
-            finally:
-                q.stop()
-                spark.catalog.dropTempView(sink)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    # pandas -> Arrow LocalRelation (a row list would parallelize to 32 tasks)
-    return spark.createDataFrame(pdf, "digest string")
+    return run_wave_sim(
+        spark,
+        base,
+        _overlap_waves(F.col("doc_id")),
+        lambda stream, tmp: start_memory_sink(streaming_exact_dedup(stream), sink, mode="append"),
+        lambda tmp: spark.table(sink),
+        "digest string",
+    )
 
 
 # ---------------------------------------------------------- trans 5min parity
 
 # The report spine's streaming twin (ST1): identical measure
 # expressions to the batch operator, aggregated BY THE STREAMING
-# RUNTIME across several micro-batches in complete output mode — the
-# final state table must equal the batch closed form over the union of
-# all waves.  Oracle = the same t5 aggregation the batch tier uses,
-# without the tier's derived date-key columns (the streaming plan emits
-# the raw window).
-_STREAM_T5_ORACLE = orc.with_ctes(
-    f"""SELECT platform, site_code, player_name, country,
+# RUNTIME across several micro-batches — the final state table must
+# equal the batch closed form over the union of all waves.  Oracle =
+# the same t5 aggregation the batch tier uses, without the tier's
+# derived date-key columns (the streaming plan emits the raw window);
+# the update-mode row adds the merge sink's date keys.
+def _t5_oracle(date_keys: str = "") -> str:
+    return orc.with_ctes(
+        f"""SELECT platform, site_code, player_name, country,
        ROUND(trans_in_amount, 6) + 0.0 AS trans_in_amount,
        ROUND(trans_out_amount, 6) + 0.0 AS trans_out_amount,
        trans_in_count, trans_out_count,
        ROUND(trans_out_lost_amount, 6) + 0.0 AS trans_out_lost_amount,
-       start_time
+       start_time{date_keys}
 FROM (
   SELECT platform, site_code, player_name, country,
          time_bucket(INTERVAL '5 minutes', trade_time) AS start_time,
@@ -252,82 +315,58 @@ FROM (
     AND trade_time >= TIMESTAMP '{EVENTS_GTE}' AND trade_time < TIMESTAMP '{EVENTS_LT}'
   GROUP BY 1, 2, 3, 4, 5
 )""",
-    "player_value_log",
-)
+        "player_value_log",
+    )
+
+
+_STREAM_T5_ORACLE = _t5_oracle()
+
+
+def _month_pvl(spark: SparkSession, sf_dir: str) -> DataFrame:
+    pvl = td.player_value_log(spark, sf_dir)
+    return pvl.filter((F.col("trade_time") >= _ts(EVENTS_GTE)) & (F.col("trade_time") < _ts(EVENTS_LT)))
 
 
 @register(
     "streaming_trans_summary_5min",
     _STREAM_T5_ORACLE,
     survey_ids="ST1 ST2 A1 A2 A3 (streaming/pipeline.py streaming_trans_summary_5min)",
+    kind="orch",
 )
 def q_streaming_trans_summary_5min(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Feed the wallet log through the STREAMING 5-min aggregation in
-    three time-ordered micro-batch waves (days 1-10 / 11-20 / rest of
-    the month); complete-mode state must merge the waves' partial
-    aggregates into exactly the batch answer.  Cross-batch partial-agg
-    merge is the semantics under test: every window that spans a wave
-    boundary day is first emitted partial and then revised."""
-    import shutil
-    import tempfile
-
+    three time-ordered waves (days 1-10 / 11-20 / rest of the month),
+    all landed before the first trigger and consumed 8 files per
+    micro-batch in timestamp order; complete-mode state must merge the
+    batches' partial aggregates into exactly the batch answer.
+    Cross-batch partial-agg merge is the semantics under test: every
+    window that spans a batch boundary is first emitted partial and
+    then revised.  The 4-partition state scope matters here because
+    complete mode re-emits every window per trigger."""
     from tg_reporting_etl_spark.streaming.pipeline import (
         start_memory_sink,
         streaming_trans_summary_5min,
     )
 
-    pvl = td.player_value_log(spark, sf_dir).filter(
-        (F.col("trade_time") >= F.lit(EVENTS_GTE).cast("timestamp"))
-        & (F.col("trade_time") < F.lit(EVENTS_LT).cast("timestamp"))
+    wave_id = (
+        F.when(F.col("trade_time") < _ts("2024-01-11 00:00:00"), 0)
+        .when(F.col("trade_time") < _ts("2024-01-21 00:00:00"), 1)
+        .otherwise(2)
     )
-    waves = ["2024-01-11 00:00:00", "2024-01-21 00:00:00"]
-    tmp = tempfile.mkdtemp(prefix="stream_t5_")
-    src = f"{tmp}/src"
     sink = "streaming_trans_summary_5min_sink"
-    try:
-        # r18: state scope (4 partitions) — complete-mode state re-emits
-        # every window per trigger; at the fixture's scale the cost is
-        # state-store commits x partitions x triggers, not rows (same
-        # rationale/measurement as the r13 rows already scoped)
-        with _stream_state_scope(spark):
-            # r18: one scan stages all three time waves (was three filtered
-            # writes = three scans); release order fixes the file-source
-            # timestamp order, so triggers still consume days 1-10 / 11-20 /
-            # rest-of-month in sequence
-            wave_id = (
-                F.when(F.col("trade_time") < F.lit(waves[0]).cast("timestamp"), 0)
-                .when(F.col("trade_time") < F.lit(waves[1]).cast("timestamp"), 1)
-                .otherwise(2)
-            )
-            release = _stage_waves(pvl, wave_id, f"{tmp}/staging", src)
-            for k in (0, 1, 2):
-                release(k)
-            stream = spark.readStream.schema(
-                spark.read.parquet(src).schema
-            ).option("maxFilesPerTrigger", "8").parquet(src)
-            q = start_memory_sink(streaming_trans_summary_5min(stream), sink, mode="complete")
-            try:
-                q.processAllAvailable()
-                pdf = (
-                    round_doubles(
-                        spark.table(sink).drop("end_time")
-                    ).toPandas()
-                )
-            finally:
-                q.stop()
-                spark.catalog.dropTempView(sink)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    # pandas -> Arrow LocalRelation (a row list would parallelize to 32 tasks)
-    return spark.createDataFrame(
-        pdf,
-        "platform string, site_code string, player_name string, country string, "
-        "trans_in_amount double, trans_out_amount double, trans_in_count long, "
-        "trans_out_count long, trans_out_lost_amount double, start_time timestamp",
+    return run_wave_sim(
+        spark,
+        _month_pvl(spark, sf_dir),
+        wave_id,
+        lambda stream, tmp: start_memory_sink(streaming_trans_summary_5min(stream), sink, mode="complete"),
+        lambda tmp: round_doubles(spark.table(sink)),
+        _T5_SCHEMA,
+        waves=((0, 1, 2),),
+        max_files=8,
     )
 
 
-# ------------------------------------- trans 5min DEPLOYMENT shape (r15)
+# ------------------------------------------- trans 5min DEPLOYMENT shape
 
 # The complete-mode row above proves cross-batch partial-agg MERGE
 # (state = every window ever seen — fine in a harness, unbounded at
@@ -339,39 +378,14 @@ def q_streaming_trans_summary_5min(spark: SparkSession, sf_dir: str) -> DataFram
 # the sink's partition-key derivation — if the watermark wrongly
 # dropped the late wave, or the merge grain wiped same-window rows for
 # keys absent from a batch, the hash breaks.
-_STREAM_T5_UPDATE_ORACLE = orc.with_ctes(
-    f"""SELECT platform, site_code, player_name, country,
-       ROUND(trans_in_amount, 6) + 0.0 AS trans_in_amount,
-       ROUND(trans_out_amount, 6) + 0.0 AS trans_out_amount,
-       trans_in_count, trans_out_count,
-       ROUND(trans_out_lost_amount, 6) + 0.0 AS trans_out_lost_amount,
-       start_time,
-       CAST(year(start_time) * 10000 + month(start_time) * 100 + day(start_time) AS INT) AS summary_date,
-       CAST(hour(start_time) AS INT) AS hours,
-       CAST(minute(start_time) AS INT) AS mins
-FROM (
-  SELECT platform, site_code, player_name, country,
-         time_bucket(INTERVAL '5 minutes', trade_time) AS start_time,
-         SUM(CASE WHEN trade_type = 'IN' THEN value ELSE 0.0 END) AS trans_in_amount,
-         SUM(CASE WHEN trade_type = 'OUT' THEN value ELSE 0.0 END) AS trans_out_amount,
-         CAST(SUM(CASE WHEN trade_type = 'IN' THEN 1 ELSE 0 END) AS BIGINT) AS trans_in_count,
-         CAST(SUM(CASE WHEN trade_type = 'OUT' THEN 1 ELSE 0 END) AS BIGINT) AS trans_out_count,
-         SUM(CASE WHEN trade_type = 'OUT' THEN before_value ELSE 0.0 END)
-           - SUM(CASE WHEN trade_type = 'OUT' THEN after_value ELSE 0.0 END)
-           - SUM(CASE WHEN trade_type = 'OUT' THEN value ELSE 0.0 END) AS trans_out_lost_amount
-  FROM player_value_log
-  WHERE trade_status = 'SUCCESS'
-    AND trade_time >= TIMESTAMP '{EVENTS_GTE}' AND trade_time < TIMESTAMP '{EVENTS_LT}'
-  GROUP BY 1, 2, 3, 4, 5
-)""",
-    "player_value_log",
-)
+_STREAM_T5_UPDATE_ORACLE = _t5_oracle(_DATE_KEYS_SQL)
 
 
 @register(
     "streaming_trans_summary_update",
     _STREAM_T5_UPDATE_ORACLE,
     survey_ids="ST2 ST3 ST6 (streaming/pipeline.py streaming_trans_summary_5min + start_partitioned_sink, update mode + watermark)",
+    kind="orch",
 )
 def q_streaming_trans_summary_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Run the 5-min trans aggregation in UPDATE mode with a 3-day
@@ -392,87 +406,43 @@ def q_streaming_trans_summary_update(spark: SparkSession, sf_dir: str) -> DataFr
     the whole month: a watermark mis-drop of the late wave or a merge
     at the wrong grain both break the hash.
     """
-    import shutil
-    import tempfile
-
     from tg_reporting_etl_spark.streaming.pipeline import (
         TRANS_5MIN_GRAIN,
         start_partitioned_sink,
         streaming_trans_summary_5min,
     )
 
-    pvl = td.player_value_log(spark, sf_dir).filter(
-        (F.col("trade_time") >= F.lit(EVENTS_GTE).cast("timestamp"))
-        & (F.col("trade_time") < F.lit(EVENTS_LT).cast("timestamp"))
-    )
-    t = lambda s: F.lit(s).cast("timestamp")  # noqa: E731
     straggler = (
-        (F.col("trade_time") >= t("2024-01-19 00:00:00"))
-        & (F.col("trade_time") < t("2024-01-20 00:00:00"))
+        (F.col("trade_time") >= _ts("2024-01-19 00:00:00"))
+        & (F.col("trade_time") < _ts("2024-01-20 00:00:00"))
         & (F.col("trade_type") == "OUT")
     )
-    # wave id as ONE when-chain (straggler ⊂ [Jan 19, 20) ⊂ wave 1's
-    # range, so it must be peeled off first) — identical row partition
-    # to the four filters it replaces, computed in a single scan
+    # straggler ⊂ [Jan 19, 20) ⊂ wave 1's range, so it is peeled off first
     wave_id = (
         F.when(straggler, 2)  # LATE: watermark is ~Jan 17 when this lands
-        .when(F.col("trade_time") < t("2024-01-11 00:00:00"), 0)
-        .when(F.col("trade_time") < t("2024-01-21 00:00:00"), 1)
+        .when(F.col("trade_time") < _ts("2024-01-11 00:00:00"), 0)
+        .when(F.col("trade_time") < _ts("2024-01-21 00:00:00"), 1)
         .otherwise(3)
     )
-    tmp = tempfile.mkdtemp(prefix="stream_t5u_")
-    src, table, ckpt = f"{tmp}/src", f"{tmp}/table", f"{tmp}/ckpt"
-    try:
-        release = _stage_waves(pvl, wave_id, f"{tmp}/staging", src)
-        with _stream_state_scope(spark):
-            release(0)
-            stream = spark.readStream.schema(spark.read.parquet(src).schema).parquet(src)
-            agg = streaming_trans_summary_5min(stream, watermark="3 days")
-            # day-grain directories: each wave's merge rewrites O(days
-            # touched) partitions, not O(5-min windows touched) — the
-            # deployment grain for a month-span backfill (hours/mins
-            # stay as table COLUMNS either way)
-            q = start_partitioned_sink(
-                agg, table, ckpt, keys=TRANS_5MIN_GRAIN, partition_cols=["summary_date"]
-            )
-            try:
-                q.processAllAvailable()
-                for k in (1, 2, 3):
-                    release(k)
-                    q.processAllAvailable()
-            finally:
-                q.stop()
-            # explicit select: the partition column reads back LAST in
-            # the file schema, and createDataFrame(pdf, schema) maps
-            # positionally
-            pdf = (
-                round_doubles(
-                    spark.read.parquet(table).select(
-                        "platform",
-                        "site_code",
-                        "player_name",
-                        "country",
-                        "trans_in_amount",
-                        "trans_out_amount",
-                        "trans_in_count",
-                        "trans_out_count",
-                        "trans_out_lost_amount",
-                        "start_time",
-                        F.col("summary_date").cast("int").alias("summary_date"),
-                        F.col("hours").cast("int").alias("hours"),
-                        F.col("mins").cast("int").alias("mins"),
-                    )
-                ).toPandas()
-            )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    # pandas -> Arrow LocalRelation (a row list would parallelize to 32 tasks)
-    return spark.createDataFrame(
-        pdf,
-        "platform string, site_code string, player_name string, country string, "
-        "trans_in_amount double, trans_out_amount double, trans_in_count long, "
-        "trans_out_count long, trans_out_lost_amount double, start_time timestamp, "
-        "summary_date int, hours int, mins int",
+
+    def start(stream, tmp):
+        agg = streaming_trans_summary_5min(stream, watermark="3 days")
+        # day-grain directories: each wave's merge rewrites O(days
+        # touched) partitions, not O(5-min windows touched) — the
+        # deployment grain for a month-span backfill (hours/mins
+        # stay as table COLUMNS either way)
+        return start_partitioned_sink(
+            agg, f"{tmp}/table", f"{tmp}/ckpt", keys=TRANS_5MIN_GRAIN, partition_cols=["summary_date"]
+        )
+
+    return run_wave_sim(
+        spark,
+        _month_pvl(spark, sf_dir),
+        wave_id,
+        start,
+        lambda tmp: round_doubles(spark.read.parquet(f"{tmp}/table")),
+        _T5_SCHEMA + _DATE_KEYS_SCHEMA,
+        waves=(0, 1, 2, 3),
     )
 
 
@@ -525,6 +495,7 @@ WHERE ({agree}) * 1.0 / {N_HASHES} >= 0.5"""
     "streaming_minhash_lsh_index",
     _stream_near_dup_oracle(),
     survey_ids="LLM streaming MinHash-LSH near-dup index (streaming/pipeline.py start_near_dup_sink)",
+    kind="orch",
 )
 def q_streaming_minhash_lsh_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Feed the documents corpus through the incremental MinHash-LSH
@@ -537,16 +508,11 @@ def q_streaming_minhash_lsh_index(spark: SparkSession, sf_dir: str) -> DataFrame
     wave 2 pairs with its wave-1 partner), and idempotent index merges —
     then proves the accumulated pairs equal the batch closed form.
 
-    Runs under ``_stream_state_scope`` (r13 task-7 profile: the row is
-    NOT scheduling-bound — addBatch, i.e. the foreachBatch body's
-    signature compute + probe joins + index appends, is ~90 % of
-    trigger time — but the body's per-batch frames are a few thousand
-    rows, so 32-way exchanges spend more on task launches than bytes:
-    4 partitions takes the warm row 4.9 -> 3.8 s with hash-identical
-    output)."""
-    import shutil
-    import tempfile
-
+    The row is not scheduling-bound: the foreachBatch body (signature
+    compute, probe joins, index appends) is ~90 % of trigger time.  Its
+    per-batch frames are a few thousand rows, though, so the 4-partition
+    state scope still beats 32-way exchanges (warm row 4.9 -> 3.8 s,
+    hash-identical output)."""
     from tg_reporting_etl_spark.streaming.pipeline import start_near_dup_sink
 
     docs = (
@@ -554,32 +520,14 @@ def q_streaming_minhash_lsh_index(spark: SparkSession, sf_dir: str) -> DataFrame
         .filter(F.col("text").isNotNull())
         .select("doc_id", "text")
     )
-    tmp = tempfile.mkdtemp(prefix="stream_nd_")
-    src = f"{tmp}/src"
-    try:
-        with _stream_state_scope(spark):
-            # r19: one scan stages the corpus by WAVE (explode re-delivers
-            # the shared doc_id%3==1 third with the old byte layout)
-            wave_expr, w1, w2 = _overlap_waves(F.col("doc_id"))
-            release = _stage_waves(docs, wave_expr, f"{tmp}/staging", src)
-            release(w1)
-            stream = spark.readStream.schema("doc_id long, text string").parquet(src)
-            q = start_near_dup_sink(stream, f"{tmp}/index", f"{tmp}/ckpt")
-            try:
-                q.processAllAvailable()
-                release(w2)
-                q.processAllAvailable()
-                pdf = (
-                    spark.read.parquet(f"{tmp}/index/pairs")
-                    .select("doc_a", "doc_b", F.round("est_jaccard", 6).alias("est_jaccard"))
-                    .toPandas()
-                )
-            finally:
-                q.stop()
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    # pandas -> Arrow LocalRelation (a row list would parallelize to 32 tasks)
-    return spark.createDataFrame(pdf, "doc_a long, doc_b long, est_jaccard double")
+    return run_wave_sim(
+        spark,
+        docs,
+        _overlap_waves(F.col("doc_id")),
+        lambda stream, tmp: start_near_dup_sink(stream, f"{tmp}/index", f"{tmp}/ckpt"),
+        lambda tmp: round_doubles(spark.read.parquet(f"{tmp}/index/pairs")),
+        "doc_a long, doc_b long, est_jaccard double",
+    )
 
 
 # --------------------------------------------- continuous top-k parity
@@ -602,6 +550,7 @@ def _continuous_topk_oracle() -> str:
     "streaming_continuous_topk",
     _continuous_topk_oracle(),
     survey_ids="LLM streaming continuous top-k similarity search (streaming/pipeline.py start_continuous_topk_sink)",
+    kind="orch",
 )
 def q_streaming_continuous_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Feed the embedding corpus through the continuous top-k sink as
@@ -616,43 +565,19 @@ def q_streaming_continuous_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     batches — a true neighbor arriving in wave 2 must displace a
     wave-1 incumbent.  The state table is |queries| x k rows forever,
     the cluster-scale invariant."""
-    import shutil
-    import tempfile
+    from tg_reporting_etl_spark.streaming.pipeline import start_continuous_topk_sink
 
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     queries = emb.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
     )
-    tmp = tempfile.mkdtemp(prefix="stream_ct_")
-    src = f"{tmp}/src"
-    try:
-        from tg_reporting_etl_spark.streaming.pipeline import start_continuous_topk_sink
-
-        # r18: state scope (4 partitions) — the foreachBatch body's only
-        # wide op is a |queries| x k window re-rank; 32-way exchanges on
-        # a few-hundred-row frame spend more on task launches than bytes
-        with _stream_state_scope(spark):
-            # r19: one scan stages the corpus by WAVE (explode re-delivers
-            # the shared vec_id%3==1 third with the old byte layout)
-            wave_expr, w1, w2 = _overlap_waves(F.col("vec_id"))
-            release = _stage_waves(emb, wave_expr, f"{tmp}/staging", src)
-            release(w1)
-            stream = spark.readStream.schema(
-                "vec_id long, embedding array<float>"
-            ).parquet(src)
-            q = start_continuous_topk_sink(stream, queries, f"{tmp}/index", f"{tmp}/ckpt", k=5)
-            try:
-                q.processAllAvailable()
-                release(w2)
-                q.processAllAvailable()
-                pdf = spark.read.parquet(f"{tmp}/index/topk").toPandas()
-            finally:
-                q.stop()
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    # pandas -> Arrow LocalRelation (a row list would parallelize to 32 tasks)
-    return spark.createDataFrame(
-        pdf, "query_id long, neighbor_id long, cos_sim double, rank int"
+    return run_wave_sim(
+        spark,
+        emb,
+        _overlap_waves(F.col("vec_id")),
+        lambda stream, tmp: start_continuous_topk_sink(stream, queries, f"{tmp}/index", f"{tmp}/ckpt", k=5),
+        lambda tmp: spark.read.parquet(f"{tmp}/index/topk"),
+        "query_id long, neighbor_id long, cos_sim double, rank int",
     )
 
 
@@ -677,6 +602,7 @@ FROM p ASOF LEFT JOIN c ON p.user_id = c.user_id AND p.ts >= c.ts"""
     "streaming_asof_enrich",
     _STREAM_ASOF_ORACLE,
     survey_ids="LLM/ST streaming as-of enrich (streaming/stateful.py streaming_asof_enrich, applyInPandasWithState)",
+    kind="orch",
 )
 def q_streaming_asof_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Attribute every purchase to the user's most recent click at or
@@ -692,9 +618,7 @@ def q_streaming_asof_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     prunes.  Exercises: tagged-union stream, per-key state carried
     across batches, inclusive-tie backward search — against DuckDB's
     native ASOF JOIN."""
-    import shutil
-    import tempfile
-
+    from tg_reporting_etl_spark.streaming.pipeline import start_memory_sink
     from tg_reporting_etl_spark.streaming.stateful import streaming_asof_enrich
 
     ev = load_table(spark, sf_dir, "events").filter(F.col("user_id").isNotNull())
@@ -713,80 +637,36 @@ def q_streaming_asof_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.max("event_id").alias("rid"))
         .select("key", "ts", F.lit("R").alias("side"), "rid", F.col("rid").cast("double").alias("val"))
     )
-    unified = lefts.unionByName(rights)
-    split = F.lit("2024-01-16 00:00:00").cast("timestamp")
-    tmp = tempfile.mkdtemp(prefix="stream_asof_")
-    src = f"{tmp}/src"
     sink = "streaming_asof_enrich_sink"
-    try:
-        # r18: state scope at min(16, session width) — applyInPandasWithState
-        # is the one streaming row whose per-trigger cost is PYTHON compute
-        # (the as-of function runs per key group), so unlike the 4-way
-        # scoped rows it still wants worker parallelism: A/B at sf0.1
-        # measured 4p 7.4s / 16p 5.8s / 32p 5.9s (state-commit floor vs
-        # Python parallelism trade).  The min() keeps a lower-core driver
-        # run from being pinned wider than its session.
-        asof_parts = min(16, int(spark.conf.get("spark.sql.shuffle.partitions", "16")))
-        with _stream_state_scope(spark, asof_parts):
-            # r18: one scan stages both time waves (the rights branch pays
-            # its groupBy once, not per wave)
-            # two whens, no otherwise: a NULL ts matched neither old filter,
-            # so it must land in neither wave (unreleased default partition)
-            release = _stage_waves(
-                unified,
-                F.when(F.col("ts") < split, 0).when(F.col("ts") >= split, 1),
-                f"{tmp}/staging",
-                src,
-            )
-            release(0)
-            stream = spark.readStream.schema(
-                "key long, ts timestamp, side string, rid long, val double"
-            ).parquet(src)
-            # retention far above the fixture's one-month span: no pruning,
-            # so the emit-once answer equals the unlimited-lookback closed form
-            out = streaming_asof_enrich(stream, retention_seconds=10 * 366 * 86400)
-            q = (
-                out.writeStream.format("memory")
-                .queryName(sink)
-                .outputMode("append")
-                .start()
-            )
-            try:
-                q.processAllAvailable()
-                release(1)
-                q.processAllAvailable()
-                pdf = (
-                    spark.table(sink)
-                    .select(
-                        F.col("rid").alias("event_id"),
-                        F.col("key").alias("user_id"),
-                        "ts",
-                        F.col("r_ts").alias("click_ts"),
-                        F.col("r_val").cast("long").alias("click_event_id"),
-                    )
-                    .toPandas()
-                )
-            finally:
-                q.stop()
-                spark.catalog.dropTempView(sink)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    # click_event_id is NULLABLE (a purchase with no prior click): on a
-    # non-Arrow toPandas it lands as float64-with-NaN, and the non-Arrow
-    # createDataFrame verifier rejects 8513.0 for LongType — normalize
-    # to int-or-None so the row is session-config-agnostic (the driver
-    # runs a vanilla session).
-    import pandas as pd
 
-    pdf["click_event_id"] = pd.Series(
-        [None if pd.isna(v) else int(v) for v in pdf["click_event_id"]],
-        index=pdf.index,
-        dtype=object,  # a bare list assignment re-coerces to float64/NaN
-    )
-    # pandas -> Arrow LocalRelation (a row list would parallelize to 32 tasks)
-    return spark.createDataFrame(
-        pdf,
+    def start(stream, tmp):
+        # retention far above the fixture's one-month span: no pruning,
+        # so the emit-once answer equals the unlimited-lookback closed form
+        out = streaming_asof_enrich(stream, retention_seconds=10 * 366 * 86400)
+        return start_memory_sink(out, sink, mode="append")
+
+    def collect(tmp):
+        return spark.table(sink).select(
+            F.col("rid").alias("event_id"),
+            F.col("key").alias("user_id"),
+            "ts",
+            F.col("r_ts").alias("click_ts"),
+            F.col("r_val").alias("click_event_id"),
+        )
+
+    # State width min(16, session): the as-of function is PYTHON compute
+    # per key group, so unlike the 4-way rows it still wants worker
+    # parallelism (sf0.1: 4p 7.4 s / 16p 5.8 s / 32p 5.9 s); the min()
+    # keeps a lower-core run from being pinned wider than its session.
+    parts = min(16, int(spark.conf.get("spark.sql.shuffle.partitions", "16")))
+    return run_wave_sim(
+        spark,
+        lefts.unionByName(rights),
+        _month_halves(),
+        start,
+        collect,
         "event_id long, user_id long, ts timestamp, click_ts timestamp, click_event_id long",
+        parts=parts,
     )
 
 
@@ -795,8 +675,7 @@ def q_streaming_asof_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _streaming_wau_oracle() -> str:
     """Same ground truth as the batch ``trailing_active_users`` row —
-    one oracle string for both engines' shapes (the r12
-    continuous-top-k precedent)."""
+    one oracle string for both engines' shapes."""
     from tg_reporting_etl_spark.plans.session_plans import _WAU_ORACLE
 
     return _WAU_ORACLE
@@ -806,6 +685,7 @@ def _streaming_wau_oracle() -> str:
     "streaming_wau",
     _streaming_wau_oracle(),
     survey_ids="LLM/ST streaming exact trailing-7-day actives (streaming/pipeline.py streaming_trailing_active_users_exact, chained stateful aggs)",
+    kind="orch",
 )
 def q_streaming_wau(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact trailing-7-day active users maintained CONTINUOUSLY via
@@ -821,67 +701,32 @@ def q_streaming_wau(spark: SparkSession, sf_dir: str) -> DataFrame:
     SENTINEL row rides in wave 2 purely to push the final watermark
     past every real window: it must flow THROUGH the EventTimeWatermark
     node (an in-stream filter would be pushed below it by Catalyst and
-    starve the watermark), so it is excluded from the RESULT after
-    collection — its own windows sit a decade away from the fixture's
+    starve the watermark), so it is filtered out of the sink table when
+    collecting — its own windows sit a decade away from the fixture's
     and cannot touch a real report_date.
 
     Exercises: watermark propagation across chained stateful operators
     (stage-1 window close feeding stage-2 tumbling re-window in the
     same no-data batch cascade), per-(window, user) distinct state, and
     emit-exactly-once append semantics across waves."""
-    import shutil
-    import tempfile
-
-    ev = load_table(spark, sf_dir, "events").select("user_id", "ts")
-    split = F.lit("2024-01-16 00:00:00").cast("timestamp")
-    sentinel = spark.createDataFrame(
-        [(-1, "2035-01-01 00:00:00")], ["user_id", "s"]
-    ).select("user_id", F.col("s").cast("timestamp").alias("ts"))
-    tmp = tempfile.mkdtemp(prefix="stream_wau_")
-    src = f"{tmp}/src"
-    sink = "streaming_wau_sink"
-    try:
-        with _stream_state_scope(spark):
-            return _run_wau_sim(spark, ev, split, sentinel, src, sink)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
-def _run_wau_sim(spark, ev, split, sentinel, src, sink):
     from tg_reporting_etl_spark.streaming.pipeline import (
+        start_memory_sink,
         streaming_trailing_active_users_exact,
     )
 
-    # r18: one scan stages both time waves; the far-future sentinel's own
-    # ts lands it in wave 1 (>= split), exactly where the old second write
-    # unioned it
-    release = _stage_waves(
+    ev = load_table(spark, sf_dir, "events").select("user_id", "ts")
+    sentinel = spark.createDataFrame(
+        [(-1, "2035-01-01 00:00:00")], ["user_id", "s"]
+    ).select("user_id", F.col("s").cast("timestamp").alias("ts"))
+    sink = "streaming_wau_sink"
+    return run_wave_sim(
+        spark,
         ev.unionByName(sentinel),
-        # two whens, no otherwise: a NULL ts matched neither old filter
-        F.when(F.col("ts") < split, 0).when(F.col("ts") >= split, 1),
-        f"{os.path.dirname(src)}/staging",
-        src,
+        _month_halves(),
+        lambda stream, tmp: start_memory_sink(streaming_trailing_active_users_exact(stream), sink, mode="append"),
+        lambda tmp: spark.table(sink).filter(F.col("report_date") < F.lit("2030-01-01").cast("date")),
+        "report_date date, n_active long",
     )
-    release(0)
-    stream = spark.readStream.schema("user_id long, ts timestamp").parquet(src)
-    out = streaming_trailing_active_users_exact(stream)
-    q = (
-        out.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("append")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        release(1)
-        q.processAllAvailable()
-        pdf = spark.table(sink).toPandas()
-    finally:
-        q.stop()
-        spark.catalog.dropTempView(sink)
-    pdf = pdf[pdf["report_date"].astype(str) < "2030"]  # drop sentinel windows
-    # pandas -> Arrow LocalRelation (a row list would parallelize to 32 tasks)
-    return spark.createDataFrame(pdf, "report_date date, n_active long")
 
 
 # --------------------------------------------- streaming session window
@@ -921,6 +766,7 @@ FROM ids GROUP BY user_id, sid"""
     "streaming_session_window",
     _STREAM_SESSION_ORACLE,
     survey_ids="LLM/ST streaming gap sessions (streaming/pipeline.py streaming_sessionize, native session_window state merge)",
+    kind="orch",
 )
 def q_streaming_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gap-based sessions maintained CONTINUOUSLY by Spark's native
@@ -932,71 +778,30 @@ def q_streaming_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     in state (their end + gap is above the wave-1 watermark), wave-2
     extends them, and the sentinel-driven final watermark closes
     everything exactly once.  Same sentinel mechanics and rationale as
-    ``streaming_wau`` (must pass through the watermark node; excluded
-    from the result after collection)."""
-    import shutil
-    import tempfile
+    ``streaming_wau`` (must pass through the watermark node; filtered
+    out of the sink table when collecting)."""
+    from tg_reporting_etl_spark.streaming.pipeline import start_memory_sink, streaming_sessionize
 
     ev = load_table(spark, sf_dir, "events").select(
         "user_id", "ts", "event_type", "value"
     )
-    split = F.lit("2024-01-16 00:00:00").cast("timestamp")
     sentinel = spark.createDataFrame(
         [(-1, "2035-01-01 00:00:00", "view", 0.0)],
         ["user_id", "s", "event_type", "value"],
     ).select("user_id", F.col("s").cast("timestamp").alias("ts"), "event_type", "value")
-    tmp = tempfile.mkdtemp(prefix="stream_sess_")
-    src = f"{tmp}/src"
     sink = "streaming_session_sink"
-    try:
-        with _stream_state_scope(spark):
-            return _run_session_sim(spark, ev, split, sentinel, src, sink)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
-def _run_session_sim(spark, ev, split, sentinel, src, sink):
-    from tg_reporting_etl_spark.streaming.pipeline import streaming_sessionize
-
-    # r18: one scan stages both time waves; the far-future sentinel's own
-    # ts lands it in wave 1 (>= split), exactly where the old second write
-    # unioned it
-    release = _stage_waves(
+    return run_wave_sim(
+        spark,
         ev.unionByName(sentinel),
-        # two whens, no otherwise: a NULL ts matched neither old filter
-        F.when(F.col("ts") < split, 0).when(F.col("ts") >= split, 1),
-        f"{os.path.dirname(src)}/staging",
-        src,
-    )
-    release(0)
-    stream = spark.readStream.schema(
-        "user_id long, ts timestamp, event_type string, value double"
-    ).parquet(src)
-    out = streaming_sessionize(stream)
-    q = (
-        out.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("append")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        release(1)
-        q.processAllAvailable()
-        pdf = spark.table(sink).toPandas()
-    finally:
-        q.stop()
-        spark.catalog.dropTempView(sink)
-    pdf = pdf[pdf["user_id"] >= 0]  # drop the sentinel's own session
-    # pandas -> Arrow LocalRelation (a row list would parallelize to 32 tasks)
-    return spark.createDataFrame(
-        pdf,
+        _month_halves(),
+        lambda stream, tmp: start_memory_sink(streaming_sessionize(stream), sink, mode="append"),
+        lambda tmp: spark.table(sink).filter(F.col("user_id") >= 0),
         "user_id long, session_start timestamp, session_end timestamp,"
         " n_events long, total_value double, n_event_types long",
     )
 
 
-# --------------------------------------- player_summary 5min parity (r14)
+# --------------------------------------- player_summary 5min parity
 
 # One-year slice of the bet-round log: the player grain is ~7x finer
 # than trans (562k windows at sf0.1 over the full lineitem range) and
@@ -1004,27 +809,35 @@ def _run_session_sim(spark, ev, split, sentinel, src, sink):
 # the semantics under test), so the slice bounds the re-emitted state
 # at the trans row's scale while still spanning a wave boundary.
 _PLAYER_GTE, _PLAYER_LT = "1996-01-01 00:00:00", "1997-01-01 00:00:00"
+_P5U_GTE, _P5U_LT = "1996-06-01 00:00:00", "1996-07-01 00:00:00"
 
 
-def _stream_p5_oracle() -> str:
+def _stream_p5_oracle(gte: str = _PLAYER_GTE, lt: str = _PLAYER_LT, date_keys: str = "") -> str:
     """Same p5f closed form as the batch tier (player_plans._p5_ctes),
-    narrowed to the one-year slice and WITHOUT the tier's derived
-    date-key columns — the streaming plan emits the raw window start
-    (the r12/r13 shared-oracle precedent)."""
+    narrowed to a slice and WITHOUT the tier's derived date-key columns
+    — the streaming plan emits the raw window start; the update-mode
+    row adds the merge sink's date keys."""
     from tg_reporting_etl_spark.plans.player_plans import _COMMON, _KEYS, _p5_ctes
 
     return orc.with_ctes(
-        f"SELECT {_KEYS}, {_COMMON},\n       start_time\nFROM p5f",
+        f"SELECT {_KEYS}, {_COMMON},\n       start_time{date_keys}\nFROM p5f",
         "player_profit_log",
         "game_sites",
-        extra=[_p5_ctes(_PLAYER_GTE, _PLAYER_LT).strip()],
+        extra=[_p5_ctes(gte, lt).strip()],
     )
+
+
+def _ppl_slice(spark: SparkSession, sf_dir: str, gte: str, lt: str) -> DataFrame:
+    # watermarks need TIMESTAMP (the adapter yields NTZ from lineitem dates)
+    ppl = td.player_profit_log(spark, sf_dir).withColumn("round_time", F.col("round_time").cast("timestamp"))
+    return ppl.filter((F.col("round_time") >= _ts(gte)) & (F.col("round_time") < _ts(lt)))
 
 
 @register(
     "streaming_player_summary_5min",
     _stream_p5_oracle(),
     survey_ids="ST1 ST2 A1 A2 A4 J1 F6 F7 (streaming/pipeline.py streaming_player_summary_5min, pre-agg stream-static dim join)",
+    kind="orch",
 )
 def q_streaming_player_summary_5min(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's SECOND report spine (player grain) as a
@@ -1044,102 +857,36 @@ def q_streaming_player_summary_5min(spark: SparkSession, sf_dir: str) -> DataFra
     is functionally dependent on the platform/site group keys), and the
     derived-measure recompute (rtp, revenue split, is_risky) on every
     cross-batch revision."""
-    import shutil
-    import tempfile
-
-    from tg_reporting_etl_spark.operators.player_summary import (
-        GROUP_KEYS as P_KEYS,
-        OUT_COLUMNS as P_OUT,
-    )
     from tg_reporting_etl_spark.streaming.pipeline import (
         start_memory_sink,
         streaming_player_summary_5min,
     )
 
-    # watermarks need TIMESTAMP (the adapter yields NTZ from lineitem dates)
-    ppl = (
-        td.player_profit_log(spark, sf_dir)
-        .withColumn("round_time", F.col("round_time").cast("timestamp"))
-        .filter(
-            (F.col("round_time") >= F.lit(_PLAYER_GTE).cast("timestamp"))
-            & (F.col("round_time") < F.lit(_PLAYER_LT).cast("timestamp"))
-        )
-    )
     sites = td.game_sites(spark, sf_dir)
     # deterministic row-content split: every multi-row group straddles it
     wave1 = F.crc32(F.concat_ws("|", "player_name", "game_code", F.col("bet").cast("string"))) % 2 == 0
-    tmp = tempfile.mkdtemp(prefix="stream_p5_")
-    src = f"{tmp}/src"
     sink = "streaming_player_summary_5min_sink"
-    try:
-        with _stream_state_scope(spark):
-            # r18: one scan of the year slice stages both hash waves (was
-            # two filtered scans of the row's largest input)
-            release = _stage_waves(
-                ppl, F.when(wave1, 0).otherwise(1), f"{tmp}/staging", src
-            )
-            release(0)
-            stream = (
-                spark.readStream.schema(spark.read.parquet(src).schema)
-                .option("maxFilesPerTrigger", "8")
-                .parquet(src)
-            )
-            q = start_memory_sink(
-                streaming_player_summary_5min(stream, sites), sink, mode="complete"
-            )
-            try:
-                q.processAllAvailable()
-                release(1)
-                q.processAllAvailable()
-                pdf = round_doubles(
-                    spark.table(sink).select(*P_KEYS, *P_OUT, "start_time")
-                ).toPandas()
-            finally:
-                q.stop()
-                spark.catalog.dropTempView(sink)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    # pandas -> Arrow LocalRelation (a row list would parallelize to 32 tasks)
-    return spark.createDataFrame(
-        pdf,
-        "platform string, site_code string, game_code string, player_name string,"
-        " country string, b_count long, b_amount double, w_amount double,"
-        " fee_amount double, profit_amount double, refund_amount double,"
-        " normal_amount double, bonus_amount double, free_amount double,"
-        " jp_amount double, valid_amount double, cancel_amount double,"
-        " p_before_amount double, p_after_amount double, tg_after_amount double,"
-        " ratio double, rtp double, is_risky int, start_time timestamp",
+    return run_wave_sim(
+        spark,
+        _ppl_slice(spark, sf_dir, _PLAYER_GTE, _PLAYER_LT),
+        F.when(wave1, 0).otherwise(1),
+        lambda stream, tmp: start_memory_sink(
+            streaming_player_summary_5min(stream, sites), sink, mode="complete"
+        ),
+        lambda tmp: round_doubles(spark.table(sink)),
+        _P5_SCHEMA,
+        max_files=8,
     )
 
 
-# ------------------------- player spine, deployment shape (update mode, r16)
-
-_P5U_GTE, _P5U_LT = "1996-06-01 00:00:00", "1996-07-01 00:00:00"
-
-
-def _stream_p5_update_oracle() -> str:
-    """Batch closed form over the one-month slice, plus the sink's three
-    derived date-key columns (the durable table carries them; the
-    complete-mode row doesn't)."""
-    from tg_reporting_etl_spark.plans.player_plans import _COMMON, _KEYS, _p5_ctes
-
-    return orc.with_ctes(
-        f"""SELECT {_KEYS}, {_COMMON},
-       start_time,
-       CAST(year(start_time) * 10000 + month(start_time) * 100 + day(start_time) AS INT) AS summary_date,
-       CAST(hour(start_time) AS INT) AS hours,
-       CAST(minute(start_time) AS INT) AS mins
-FROM p5f""",
-        "player_profit_log",
-        "game_sites",
-        extra=[_p5_ctes(_P5U_GTE, _P5U_LT).strip()],
-    )
+# ------------------------------- player spine, deployment shape (update mode)
 
 
 @register(
     "streaming_player_summary_update",
-    _stream_p5_update_oracle(),
+    _stream_p5_oracle(_P5U_GTE, _P5U_LT, _DATE_KEYS_SQL),
     survey_ids="ST2 ST3 ST6 (streaming/pipeline.py streaming_player_summary_5min + start_partitioned_sink at PLAYER_5MIN_GRAIN, update mode + watermark, derived-measure revision under late data)",
+    kind="orch",
 )
 def q_streaming_player_summary_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The PLAYER report spine in deployment shape: update mode + 3-day
@@ -1153,8 +900,8 @@ def q_streaming_player_summary_update(spark: SparkSession, sf_dir: str) -> DataF
     Wave plan over one month (round_time is date-granular, so a
     (keys, window) group is a (player, game, day) — and the fixture is
     ~1 row per group, so a content-hash split of one day can NOT
-    straddle groups the way the trans row's IN/OUT split does; measured
-    r16: zero multi-row June groups at sf0.001, one at sf0.01, 90 at
+    straddle groups the way the trans row's IN/OUT split does: there
+    are zero multi-row June groups at sf0.001, one at sf0.01 and 90 at
     sf0.1):
 
     - wave 1: days 1-10; wave 2: days 11-18 EXCEPT the two straggler
@@ -1172,145 +919,78 @@ def q_streaming_player_summary_update(spark: SparkSession, sf_dir: str) -> DataF
       tests/test_streaming_restart.py on synthetic multi-row groups
       (which also kills and restarts the query from its checkpoint
       between waves); wave 4: days 19-30.  A straggler window farther
-      below the post-wave-2 watermark would be DROPPED, not revised —
-      the r16 first cut held back day 11-16 fragments and the hash
-      caught exactly that.
+      below the post-wave-2 watermark would be DROPPED, not revised,
+      and the hash catches that.
+
+    Under ``SPARK_GRAFT_STREAM_RESTART=1`` (tools/scale_probe.py's
+    ``*_restart`` probe row) the query is killed after wave 2 and a NEW
+    one started on the SAME checkpoint, so the LATE wave is accepted
+    against a watermark and state recovered from the commit log —
+    checkpoint recovery certified at data-bound scale with the same
+    oracle.
 
     The final durable table must hash-match the batch closed form: a
     watermark mis-drop of either straggler set, a merge at the wrong
     grain, or a stale derived measure after revision all break the
     hash.
     """
-    import shutil
-    import tempfile
-
-    from tg_reporting_etl_spark.operators.player_summary import (
-        GROUP_KEYS as P_KEYS,
-        OUT_COLUMNS as P_OUT,
-    )
+    from tg_reporting_etl_spark.operators.player_summary import GROUP_KEYS as P_KEYS
     from tg_reporting_etl_spark.streaming.pipeline import (
         PLAYER_5MIN_GRAIN,
         start_partitioned_sink,
         streaming_player_summary_5min,
     )
 
-    ppl = (
-        td.player_profit_log(spark, sf_dir)
-        .withColumn("round_time", F.col("round_time").cast("timestamp"))
-        .filter(
-            (F.col("round_time") >= F.lit(_P5U_GTE).cast("timestamp"))
-            & (F.col("round_time") < F.lit(_P5U_LT).cast("timestamp"))
-        )
-    )
     sites = td.game_sites(spark, sf_dir)
-    t = lambda s: F.lit(s).cast("timestamp")  # noqa: E731
-    in_range = lambda lo, hi: (F.col("round_time") >= t(lo)) & (F.col("round_time") < t(hi))  # noqa: E731
-    from pyspark.sql import Window
-
-    from tg_reporting_etl_spark.operators.player_summary import GROUP_KEYS as _PK
-
-    # wave prep is batch-side: rank rows within each (window, keys)
-    # group so the rank>=2 fragments can be held back (ties in the
-    # order keys only move rows between waves — the waves still
-    # partition the slice, so the final table is unaffected)
-    # full measure tuple as the order key: exact ties would make wave
-    # MEMBERSHIP run-dependent (final table provably unaffected — the
-    # waves always partition the slice — but reproducible waves are
-    # worth one more sort key when debugging a wave-level failure)
+    in_range = lambda lo, hi: (F.col("round_time") >= _ts(lo)) & (F.col("round_time") < _ts(hi))  # noqa: E731
+    # rank rows within each (window, keys) group so the rank>=2
+    # fragments can be held back.  The full measure tuple is the order
+    # key: ties would only move rows between waves (the waves still
+    # partition the slice), but reproducible waves ease debugging.
     rn = F.row_number().over(
-        Window.partitionBy("round_time", *_PK).orderBy(
+        Window.partitionBy("round_time", *P_KEYS).orderBy(
             "bet", "win", "profit", "fee", "normal_value", "refund"
         )
     )
-    ppl = ppl.withColumn("_rn", rn)
     straggler = in_range("1996-06-17 00:00:00", "1996-06-18 00:00:00") | (
         in_range("1996-06-15 00:00:00", "1996-06-19 00:00:00") & (F.col("_rn") >= 2)
     )
-    # wave id as ONE when-chain (straggler ⊂ [Jun 15, 19) ⊂ wave 1's
-    # range, so it is peeled off first) — identical row partition to
-    # the four filters it replaces, computed in a single scan
+    # straggler ⊂ [Jun 15, 19) ⊂ wave 1's range, so it is peeled off first
     wave_id = (
         F.when(straggler, 2)  # LATE: watermark is Jun 15 when this lands
-        .when(F.col("round_time") < t("1996-06-11 00:00:00"), 0)
-        .when(F.col("round_time") < t("1996-06-19 00:00:00"), 1)
+        .when(F.col("round_time") < _ts("1996-06-11 00:00:00"), 0)
+        .when(F.col("round_time") < _ts("1996-06-19 00:00:00"), 1)
         .otherwise(3)
     )
-    tmp = tempfile.mkdtemp(prefix="stream_p5u_")
-    src, table, ckpt = f"{tmp}/src", f"{tmp}/table", f"{tmp}/ckpt"
-    # SPARK_GRAFT_STREAM_RESTART=1 (r16 verdict task 5, set by
-    # tools/scale_probe.py's *_restart probe row): kill the query after
-    # wave 2 and start a NEW one on the SAME checkpoint, so the LATE
-    # straggler wave is accepted against a watermark and state recovered
-    # from the commit log — checkpoint recovery certified at data-bound
-    # scale with the same oracle, not just on synthetic-fixture pytests.
-    restart_before_late = os.environ.get("SPARK_GRAFT_STREAM_RESTART") == "1"
-    try:
-        # staging is batch-side prep (the _rn wave-prep window runs at
-        # data width), so it stays OUTSIDE the 4-partition state scope
-        release = _stage_waves(ppl, wave_id, f"{tmp}/staging", src, drop=("_rn",))
-        with _stream_state_scope(spark):
-            release(0)
-            src_schema = spark.read.parquet(src).schema
+    ppl = _ppl_slice(spark, sf_dir, _P5U_GTE, _P5U_LT).withColumn("_rn", rn)
 
-            def _start():
-                stream = spark.readStream.schema(src_schema).parquet(src)
-                agg = streaming_player_summary_5min(stream, sites, watermark="3 days")
-                # day-grain directories, as in the trans twin: O(days
-                # touched) partition rewrites per wave, not O(windows)
-                return start_partitioned_sink(
-                    agg, table, ckpt, keys=PLAYER_5MIN_GRAIN, partition_cols=["summary_date"]
-                )
+    def start(stream, tmp):
+        agg = streaming_player_summary_5min(stream, sites, watermark="3 days")
+        # day-grain directories, as in the trans twin
+        return start_partitioned_sink(
+            agg, f"{tmp}/table", f"{tmp}/ckpt", keys=PLAYER_5MIN_GRAIN, partition_cols=["summary_date"]
+        )
 
-            q = _start()
-            try:
-                q.processAllAvailable()
-                for i in (1, 2, 3):
-                    if restart_before_late and i == 2:
-                        q.stop()  # KILL while straggler state lives only in ckpt
-                        q = _start()  # NEW query, SAME checkpoint
-                    release(i)
-                    q.processAllAvailable()
-            finally:
-                q.stop()
-            # explicit select: the partition column reads back LAST in
-            # the file schema, and createDataFrame(pdf, schema) maps
-            # positionally
-            pdf = (
-                round_doubles(
-                    spark.read.parquet(table).select(
-                        *P_KEYS,
-                        *P_OUT,
-                        "start_time",
-                        F.col("summary_date").cast("int").alias("summary_date"),
-                        F.col("hours").cast("int").alias("hours"),
-                        F.col("mins").cast("int").alias("mins"),
-                    )
-                ).toPandas()
-            )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    # pandas -> Arrow LocalRelation (a row list would parallelize to 32 tasks)
-    return spark.createDataFrame(
-        pdf,
-        "platform string, site_code string, game_code string, player_name string,"
-        " country string, b_count long, b_amount double, w_amount double,"
-        " fee_amount double, profit_amount double, refund_amount double,"
-        " normal_amount double, bonus_amount double, free_amount double,"
-        " jp_amount double, valid_amount double, cancel_amount double,"
-        " p_before_amount double, p_after_amount double, tg_after_amount double,"
-        " ratio double, rtp double, is_risky int, start_time timestamp,"
-        " summary_date int, hours int, mins int",
+    return run_wave_sim(
+        spark,
+        ppl.withColumn("_wave", wave_id).drop("_rn"),
+        F.col("_wave"),
+        start,
+        lambda tmp: round_doubles(spark.read.parquet(f"{tmp}/table")),
+        _P5_SCHEMA + _DATE_KEYS_SCHEMA,
+        waves=(0, 1, 2, 3),
+        restart_before=2,
     )
 
 
-# ------------------------------------- embedding near-dup index parity (r14)
+# ------------------------------------------ embedding near-dup index parity
 
 def _stream_emb_oracle() -> str:
     """Closed form of the incremental embedding index: the pairs table
     any wave decomposition converges to is 'sign-LSH band-colliding
     pairs with exact cosine >= tau' over the whole corpus — exactly the
     batch ``embedding_dup_pairs_banded`` oracle (one oracle string,
-    two engines: the r12 continuous-top-k precedent)."""
+    two engines)."""
     from tg_reporting_etl_spark.plans.llm_plans import _BANDED_DUP_ORACLE
 
     return _BANDED_DUP_ORACLE
@@ -1320,13 +1000,14 @@ def _stream_emb_oracle() -> str:
     "streaming_embedding_dup_index",
     _stream_emb_oracle(),
     survey_ids="LLM streaming embedding-cosine near-dup index (streaming/pipeline.py start_embedding_dup_sink)",
+    kind="orch",
 )
 def q_streaming_embedding_dup_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Feed the embeddings corpus through the incremental sign-LSH +
     exact-cosine index as TWO overlapping micro-batch waves (vec_id%3
     in {0,1}, then {1,2} — the overlap re-delivers a third of the
     corpus, proving merge_into idempotency), then return the persistent
-    pairs table.  Same skeleton as the green minhash-LSH row; the
+    pairs table.  Same skeleton as the minhash-LSH row; the
     semantic upgrade under test is the exact-cosine verify against the
     FULL-vector history index (a near-dup arriving in wave 2 pairs with
     its wave-1 partner at its exact similarity, not an estimate).
@@ -1334,7 +1015,7 @@ def q_streaming_embedding_dup_index(spark: SparkSession, sf_dir: str) -> DataFra
     Band parameters (8 x 8 over the 64-dim corpus) and tau are pinned
     to the batch row's so both engines share one oracle string.
 
-    Under ``SPARK_GRAFT_STREAM_RESTART=1`` (r17 verdict task 4, set by
+    Under ``SPARK_GRAFT_STREAM_RESTART=1`` (set by
     tools/scale_probe.py's ``streaming_embedding_dup_index_restart``
     probe row) the query is KILLED after wave 1 and a NEW query started
     on the SAME checkpoint before wave 2 lands — so the cross-batch
@@ -1345,9 +1026,6 @@ def q_streaming_embedding_dup_index(spark: SparkSession, sf_dir: str) -> DataFra
     stay merge-idempotent across the restart.  Same closed-form oracle
     either way — a dropped wave-1 probe or a double-append would break
     the full hash."""
-    import shutil
-    import tempfile
-
     from tg_reporting_etl_spark.plans.llm_plans import COSINE_TAU
     from tg_reporting_etl_spark.streaming.pipeline import start_embedding_dup_sink
 
@@ -1364,49 +1042,21 @@ def q_streaming_embedding_dup_index(spark: SparkSession, sf_dir: str) -> DataFra
     # partitions serialize it (measured 99 s vs 41 s at 16).  ~25k
     # band rows per partition, clamped to [4, 32]; exactly the
     # state-volume sizing a real cluster would apply.
-    n_vecs = vecs.count()
-    parts = max(4, min(32, (8 * n_vecs) // 25_000))
-    restart_between_waves = os.environ.get("SPARK_GRAFT_STREAM_RESTART") == "1"
-    tmp = tempfile.mkdtemp(prefix="stream_ed_")
-    src = f"{tmp}/src"
-    try:
-        with _stream_state_scope(spark, parts):
-            # r19: one scan stages the corpus by WAVE (explode re-delivers
-            # the shared vec_id%3==1 third with the old byte layout) — the
-            # r18 tuple-release layout measured ~25% slower at the 10x probe
-            wave_expr, w1, w2 = _overlap_waves(F.col("vec_id"))
-            release = _stage_waves(vecs, wave_expr, f"{tmp}/staging", src)
-            release(w1)
+    parts = max(4, min(32, (8 * vecs.count()) // 25_000))
+    return run_wave_sim(
+        spark,
+        vecs,
+        _overlap_waves(F.col("vec_id")),
+        lambda stream, tmp: start_embedding_dup_sink(
+            stream, f"{tmp}/index", f"{tmp}/ckpt", tau=COSINE_TAU, bands=8, dims_per_band=8
+        ),
+        lambda tmp: round_doubles(spark.read.parquet(f"{tmp}/index/pairs")),
+        "vec_a long, vec_b long, cos_sim double",
+        parts=parts,
+        restart_before=1,
+    )
 
-            def _start():
-                stream = spark.readStream.schema(
-                    "vec_id long, embedding array<float>"
-                ).parquet(src)
-                return start_embedding_dup_sink(
-                    stream, f"{tmp}/index", f"{tmp}/ckpt", tau=COSINE_TAU, bands=8, dims_per_band=8
-                )
-
-            q = _start()
-            try:
-                q.processAllAvailable()
-                if restart_between_waves:
-                    q.stop()  # KILL with the wave-1 index only on disk
-                    q = _start()  # NEW query, SAME checkpoint + index
-                release(w2)
-                q.processAllAvailable()
-                pdf = (
-                    spark.read.parquet(f"{tmp}/index/pairs")
-                    .select("vec_a", "vec_b", F.round("cos_sim", 6).alias("cos_sim"))
-                    .toPandas()
-                )
-            finally:
-                q.stop()
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    # pandas -> Arrow LocalRelation (a row list would parallelize to 32 tasks)
-    return spark.createDataFrame(pdf, "vec_a long, vec_b long, cos_sim double")
-
-# ------------------------------------------ CMS counter convergence (r14)
+# ------------------------------------------------- CMS counter convergence
 
 def _stream_cms_oracle() -> str:
     """Converged closed form of the per-epoch CMS deltas: summing the
@@ -1431,20 +1081,21 @@ SELECT d, idx, CAST(count(*) AS BIGINT) AS c FROM stream GROUP BY 1, 2"""
     "streaming_cms_counters",
     _stream_cms_oracle(),
     survey_ids="LLM streaming count-min heavy-hitter counters (streaming/pipeline.py start_cms_sink, per-epoch keyed deltas)",
+    kind="orch",
 )
 def q_streaming_cms_counters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Maintain a count-min sketch over the documents' token stream as
-    two DISJOINT micro-batch waves (doc_id%2), then return the live
+    two DISJOINT micro-batch waves (doc_id parity), then return the live
     counter view (epoch-delta sum).  Waves are disjoint BY DESIGN: the
     sink's idempotency contract is per-epoch (a REPLAYED epoch rewrites
     its keyed (epoch, d, idx) rows byte-identically — pinned in
     tests/test_streaming.py), so overlapping waves would legitimately
     double-count; what the catalog row proves is cross-epoch ADDITIVE
     convergence — the summed deltas equal the batch cms_build counter
-    table, at O(D x W) state per epoch and no per-key state at all."""
-    import shutil
-    import tempfile
-
+    table, at O(D x W) state per epoch and no per-key state at all.
+    The parity is ``pmod``: the oracle counts every non-NULL doc, and
+    Spark's ``%`` would stage a negative odd id to a wave never
+    released."""
     from tg_reporting_etl_spark.streaming.pipeline import cms_counters, start_cms_sink
 
     docs = (
@@ -1452,33 +1103,19 @@ def q_streaming_cms_counters(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("text").isNotNull())
         .select("doc_id", "text")
     )
-    tmp = tempfile.mkdtemp(prefix="stream_cms_")
-    src = f"{tmp}/src"
-    try:
-        with _stream_state_scope(spark):
-            # r18: one scan stages both disjoint parity waves
-            release = _stage_waves(docs, F.col("doc_id") % 2, f"{tmp}/staging", src)
-            release(0)
-            stream = (
-                spark.readStream.schema("doc_id long, text string")
-                .parquet(src)
-                .select(F.explode(F.split("text", " ")).alias("tok"))
-            )
-            q = start_cms_sink(stream, f"{tmp}/deltas", f"{tmp}/ckpt")
-            try:
-                q.processAllAvailable()
-                release(1)
-                q.processAllAvailable()
-                pdf = cms_counters(spark, f"{tmp}/deltas").toPandas()
-            finally:
-                q.stop()
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    # pandas -> Arrow LocalRelation (a row list would parallelize to 32 tasks)
-    return spark.createDataFrame(pdf, "d int, idx long, c long")
+    return run_wave_sim(
+        spark,
+        docs,
+        F.pmod(F.col("doc_id"), F.lit(2)),
+        lambda stream, tmp: start_cms_sink(
+            stream.select(F.explode(F.split("text", " ")).alias("tok")), f"{tmp}/deltas", f"{tmp}/ckpt"
+        ),
+        lambda tmp: cms_counters(spark, f"{tmp}/deltas"),
+        "d int, idx long, c long",
+    )
 
 
-# ------------------------------------------- per-epoch quality audit (r14)
+# ------------------------------------------------- per-epoch quality audit
 
 def _stream_dq_oracle() -> str:
     """Per-epoch twin of the batch _DQ_ORACLE: wave k (event_id%2 == k)
@@ -1503,6 +1140,7 @@ def _stream_dq_oracle() -> str:
     "streaming_quality_audit",
     _stream_dq_oracle(),
     survey_ids="streaming data-quality audit (streaming/pipeline.py start_quality_audit_sink, per-epoch violation attribution)",
+    kind="orch",
 )
 def q_streaming_quality_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Run the declarative quality rule set over every micro-batch and
@@ -1512,37 +1150,19 @@ def q_streaming_quality_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     the attribution is deterministic and the oracle reproduces it);
     the rule set is the batch events_quality_report's, so each epoch's
     rows are that oracle narrowed to the wave."""
-    import shutil
-    import tempfile
-
     from tg_reporting_etl_spark.plans.events_plans import _QUALITY_RULES
     from tg_reporting_etl_spark.streaming.pipeline import start_quality_audit_sink
 
-    ev = load_table(spark, sf_dir, "events")
-    tmp = tempfile.mkdtemp(prefix="stream_dq_")
-    src = f"{tmp}/src"
-    try:
-        with _stream_state_scope(spark):
-            # r18: one scan stages both disjoint parity waves (one wave =
-            # one release = one trigger = one epoch, unchanged)
-            release = _stage_waves(ev, F.col("event_id") % 2, f"{tmp}/staging", src)
-            release(0)
-            stream = spark.readStream.schema(ev.schema).parquet(src)
-            q = start_quality_audit_sink(
-                stream, dict(_QUALITY_RULES), f"{tmp}/audit", f"{tmp}/ckpt"
-            )
-            try:
-                q.processAllAvailable()
-                release(1)
-                q.processAllAvailable()
-                pdf = (
-                    spark.read.parquet(f"{tmp}/audit")
-                    .select("epoch_id", "rule", "n_violations")
-                    .toPandas()
-                )
-            finally:
-                q.stop()
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    # pandas -> Arrow LocalRelation (a row list would parallelize to 32 tasks)
-    return spark.createDataFrame(pdf, "epoch_id long, rule string, n_violations long")
+    return run_wave_sim(
+        spark,
+        load_table(spark, sf_dir, "events"),
+        # `%`, not pmod: the oracle's epochs are DuckDB's `event_id % 2 = k`,
+        # which keeps the sign too, so a negative odd id is in no epoch on
+        # either side
+        F.col("event_id") % 2,
+        lambda stream, tmp: start_quality_audit_sink(
+            stream, dict(_QUALITY_RULES), f"{tmp}/audit", f"{tmp}/ckpt"
+        ),
+        lambda tmp: spark.read.parquet(f"{tmp}/audit"),
+        "epoch_id long, rule string, n_violations long",
+    )
